@@ -11,5 +11,5 @@ dead-letter queue (README.md:206).  The reference documents its final
 merge hop as broken (README.md:8); this one works and is tested.
 """
 
-from cdc_demo_spark.streaming.merge import latest_image, merge_into_silver, replay_oracle  # noqa: F401
+from cdc_demo_spark.streaming.merge import merge_into_silver, replay_oracle  # noqa: F401
 from cdc_demo_spark.streaming.pipeline import CdcPipeline  # noqa: F401

@@ -14,6 +14,13 @@ the BYTES while keeping the merge correct in the face of late events:
   below the erasure point while events genuinely newer (the user
   returns) insert normally.  Cost: O(1 bucket) — the same selective
   rewrite as a merge, committed through the same CAS manifest.
+  Erasure SHRINKS THE TIME-TRAVEL WINDOW to the erasure commit: every
+  older retained snapshot still holds the payload, so they are all
+  retired (``read_silver(version=<older>)`` and ``silver_changes``
+  from an older version raise SnapshotNotFound) and the key's
+  superseded bucket versions are deleted.  A ``ChangefeedRelay`` whose
+  bookmark is behind the erasure commit then gets ChangefeedLagError
+  and must re-seed from a snapshot.
 - **Bronze**: the immutable change log is rewritten WITHOUT the key's
   envelope rows, only for the batch_id partitions that contain the key
   (detected by a column-pruned scan of `key` only).  Cost tracks the
@@ -50,10 +57,11 @@ from pyspark.sql import functions as F
 
 from cdc_demo_spark.storage import DEFAULT_BACKEND, CommitBackend
 from cdc_demo_spark.streaming.merge import (
-    _commit_manifest,
     _load_manifest,
-    _next_bucket_version,
+    _manifest_versions,
+    _publish_buckets,
     _read_state,
+    _trim_manifests,
     bucket_id_of,
 )
 
@@ -66,7 +74,8 @@ def erase_key_from_silver(
 ) -> bool:
     """Replace every state row for `key` with one redacted tombstone at
     the key's max (ts, seq). Returns False if the key has no state.
-    Touches exactly one bucket; commits via the CAS manifest."""
+    Touches exactly one bucket; commits via the CAS manifest, then
+    retires every pre-erasure snapshot (see the module docstring)."""
     manifest = _load_manifest(silver_path, backend)
     if manifest is None:
         return False
@@ -93,24 +102,19 @@ def erase_key_from_silver(
         F.lit(b).cast("int").alias("__bucket"),
     )
     kept = state.filter(F.col("__key") != key).unionByName(tomb)
-
-    stage = os.path.join(silver_path, "data", f"stage-{uuid.uuid4().hex}")
-    kept.write.mode("overwrite").partitionBy("__bucket").parquet(stage)
-    state.unpersist()
-    ver = manifest["buckets"].get(str(b))
-    new_ver = _next_bucket_version(ver)
-    src = os.path.join(stage, f"__bucket={b}")
-    dst = os.path.join(silver_path, "data", f"b{b}", new_ver)
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    if os.path.exists(src):
-        os.rename(src, dst)
-    else:
-        os.makedirs(dst, exist_ok=True)
-    manifest["buckets"][str(b)] = new_ver
-    _commit_manifest(silver_path, manifest, backend)
-    shutil.rmtree(stage, ignore_errors=True)
-    if ver:
-        shutil.rmtree(os.path.join(silver_path, "data", f"b{b}", ver), ignore_errors=True)
+    try:
+        _publish_buckets(silver_path, manifest, kept, [b], backend)
+    finally:
+        state.unpersist()
+    # Every snapshot up to the one this erasure read still serves the
+    # payload: retire them first, THEN delete the bucket versions only
+    # they referenced — deleting a dir a retained manifest still names
+    # would make time travel return that snapshot minus the whole bucket.
+    pre = [(n, p) for n, p in _manifest_versions(silver_path, backend) if n <= manifest["version"]]
+    bucket_dir = os.path.join(silver_path, "data", f"b{b}")
+    for d in _trim_manifests(silver_path, pre, backend):
+        if os.path.dirname(d) == bucket_dir:
+            shutil.rmtree(d, ignore_errors=True)
     return True
 
 

@@ -17,8 +17,8 @@ working (/root/reference/README.md:8 "the dataflow template fails";
 Physical layout — a minimal Delta/Iceberg-style versioned table:
 
     silver/
-      _manifest.json       {"num_buckets": N, "buckets": {"3": "v7", ...}}
-      data/b3/v7/*.parquet  (immutable once written)
+      _manifest.v{N}.json        {"num_buckets": B, "buckets": {"3": "v7-3fa9c1d2", ...}}
+      data/b3/v7-3fa9c1d2/*.parquet  (immutable once written)
 
 A merge stages new versions for ONLY the touched key-hash buckets, then
 commits by atomically publishing the next numbered manifest
@@ -63,7 +63,6 @@ from pyspark.sql import functions as F
 from cdc_demo_spark.storage import DEFAULT_BACKEND, CommitBackend
 
 META_COLS = ("__key", "__op", "__ts", "__seq")
-MANIFEST = "_manifest.json"  # legacy single-file manifest (read fallback)
 _MANIFEST_V = re.compile(r"_manifest\.v(\d+)\.json$")
 
 
@@ -72,14 +71,6 @@ class ConcurrentCommitError(RuntimeError):
 
     Reload the manifest and re-merge (the loser's staged bucket dirs are
     unreferenced garbage, GC'd like any crash debris)."""
-
-
-def latest_image(envelopes: DataFrame) -> DataFrame:
-    """Collapse an envelope batch to one winning event per (table, key):
-    max (ts, seq); ties impossible because seq is a total order per
-    source log position."""
-    w = Window.partitionBy("table", "key").orderBy(F.desc("ts"), F.desc("seq"))
-    return envelopes.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 def _as_state(envelopes: DataFrame) -> DataFrame:
@@ -167,8 +158,7 @@ def _load_manifest(
 ) -> dict | None:
     """Resolve a snapshot: highest numbered manifest wins; with
     ``version``, that exact retained manifest (time travel) or
-    SnapshotNotFound.  Falls back to the legacy single-file manifest
-    (treated as version 0, so the first CAS commit supersedes it)."""
+    SnapshotNotFound; None for a table with no commit yet."""
     versions = _manifest_versions(silver_path, backend)
     if version is not None:
         for n, path in versions:
@@ -180,16 +170,11 @@ def _load_manifest(
             f"silver snapshot v{version} is not retained at {silver_path}; "
             f"readable versions: {[n for n, _ in versions]}"
         )
-    if versions:
-        n, path = versions[-1]
-        manifest = json.loads(backend.read(path))
-        manifest["version"] = n
-        return manifest
-    path = os.path.join(silver_path, MANIFEST)
-    if not backend.exists(path):
+    if not versions:
         return None
+    n, path = versions[-1]
     manifest = json.loads(backend.read(path))
-    manifest.setdefault("version", 0)
+    manifest["version"] = n
     return manifest
 
 
@@ -215,7 +200,7 @@ def _commit_manifest(
     )
 
 
-def _trim_manifests(silver_path: str, doomed, backend: CommitBackend) -> None:
+def _trim_manifests(silver_path: str, doomed, backend: CommitBackend) -> set[str]:
     """Delete the given (version, path) manifests and TOUCH the bucket
     dirs they alone referenced.  The sweeps' grace TTL reads dir mtime,
     and a dir referenced only by a just-trimmed manifest is typically
@@ -223,10 +208,10 @@ def _trim_manifests(silver_path: str, doomed, backend: CommitBackend) -> None:
     left the retention window, failing an in-flight reader that had
     already resolved that manifest (r10 ADVICE).  Touching on trim
     makes mtime ≈ unreference time, so the TTL measures what it
-    claims to."""
+    claims to.  Returns those newly unreferenced dirs."""
     doomed = list(doomed)
     if not doomed:
-        return
+        return set()
     was_referenced: set[str] = set()
     for _n, path in doomed:
         try:
@@ -245,6 +230,7 @@ def _trim_manifests(silver_path: str, doomed, backend: CommitBackend) -> None:
             os.utime(d, (now, now))
         except OSError:
             pass  # already swept, or non-POSIX store (sweeps are POSIX-only)
+    return newly_free
 
 
 # Superseded bucket-version dirs are NOT deleted at commit time (r10):
@@ -268,14 +254,10 @@ def silver_versions(
 
 
 def _referenced_dirs(silver_path: str, backend: CommitBackend) -> set[str]:
-    """Bucket-version dirs referenced by ANY manifest still on disk
-    (numbered + legacy) — the set a sweep must never touch."""
+    """Bucket-version dirs referenced by ANY manifest still on disk —
+    the set a sweep must never touch."""
     refs: set[str] = set()
-    manifests = [p for _, p in _manifest_versions(silver_path, backend)]
-    legacy = os.path.join(silver_path, MANIFEST)
-    if backend.exists(legacy):
-        manifests.append(legacy)
-    for path in manifests:
+    for _, path in _manifest_versions(silver_path, backend):
         try:
             raw = backend.read(path)
         except FileNotFoundError:
@@ -293,16 +275,9 @@ def _referenced_dirs(silver_path: str, backend: CommitBackend) -> set[str]:
             # the only benign torn state for numbered manifests — to
             # FileNotFoundError.
             continue
-        try:
-            m = json.loads(raw)
-        except ValueError:
-            if path == legacy:
-                # The legacy manifest is plain (unframed) JSON, so a
-                # torn in-progress legacy write is readable-but-invalid;
-                # it was never a committed snapshot, so it protects
-                # nothing.
-                continue
-            raise
+        # torn JSON here is corruption (commits are put-if-absent of
+        # complete content): raise rather than unprotect
+        m = json.loads(raw)
         for b, ver in m.get("buckets", {}).items():
             refs.add(os.path.join(silver_path, "data", f"b{b}", ver))
     return refs
@@ -391,6 +366,41 @@ def _next_bucket_version(cur_ver: str | None) -> str:
     crash-orphaned dir can never collide with a later rename."""
     n = int(cur_ver[1:].split("-")[0]) + 1 if cur_ver else 1
     return f"v{n}-{uuid.uuid4().hex[:8]}"
+
+
+def _publish_buckets(
+    silver_path: str,
+    manifest: dict,
+    df: DataFrame,
+    buckets,
+    backend: CommitBackend,
+) -> None:
+    """THE bucket-rewrite commit every silver writer (merge, tombstone
+    GC, optimize, erasure) goes through: write ``df`` partitioned by
+    ``__bucket`` to a stage dir, rename each of ``buckets``' output to
+    its next immutable version dir (an empty dir for a bucket left with
+    no rows), CAS-commit ``manifest`` naming those versions, then drop
+    the stage and sweep what the commit unreferenced.  A crash before
+    the commit leaves only unreferenced garbage, never mixed state;
+    ``manifest["buckets"]`` is updated in place."""
+    stage = os.path.join(silver_path, "data", f"stage-{uuid.uuid4().hex}")
+    df.write.mode("overwrite").partitionBy("__bucket").parquet(stage)
+    for b in buckets:
+        new_ver = _next_bucket_version(manifest["buckets"].get(str(b)))
+        src = os.path.join(stage, f"__bucket={b}")
+        dst = os.path.join(silver_path, "data", f"b{b}", new_ver)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        if os.path.exists(src):
+            os.rename(src, dst)
+        else:  # bucket emptied entirely (e.g. everything GC'd)
+            os.makedirs(dst, exist_ok=True)
+        manifest["buckets"][str(b)] = new_ver
+    _commit_manifest(silver_path, manifest, backend)  # <- the atomic point
+    # post-commit GC (crash here leaves garbage, never corruption).
+    # Superseded versions stay on disk while a retained manifest still
+    # references them (time travel); the sweep reclaims the rest.
+    shutil.rmtree(stage, ignore_errors=True)
+    _sweep_unreferenced(silver_path, buckets, backend)
 
 
 def _bucket_paths(silver_path: str, manifest: dict, buckets=None) -> list[str]:
@@ -482,7 +492,7 @@ def merge_into_silver(
         incoming.unpersist()
         return
 
-    current = _read_state(spark, silver_path, manifest, buckets=touched, num_buckets=num_buckets)
+    current = _read_state(spark, silver_path, manifest, buckets=touched)
     if current is None:
         merged = incoming
     else:
@@ -506,32 +516,14 @@ def merge_into_silver(
         merged.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     )
 
-    # Stage new bucket versions (immutable dirs), then commit the manifest.
-    stage = os.path.join(silver_path, "data", f"stage-{uuid.uuid4().hex}")
-    _capture_plan("merge_state_rewrite", new_state)
-    new_state.write.mode("overwrite").partitionBy("__bucket").parquet(stage)
-    incoming.unpersist()
-
     if manifest is None:
         manifest = {"num_buckets": num_buckets, "buckets": {}}
     manifest["schema"] = union_schema.json()  # table schema lives in metadata
-    for b in touched:
-        cur_ver = manifest["buckets"].get(str(b))
-        new_ver = _next_bucket_version(cur_ver)
-        src = os.path.join(stage, f"__bucket={b}")
-        dst = os.path.join(silver_path, "data", f"b{b}", new_ver)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        else:  # bucket emptied entirely (e.g. everything GC'd)
-            os.makedirs(dst, exist_ok=True)
-        manifest["buckets"][str(b)] = new_ver
-    _commit_manifest(silver_path, manifest, backend)  # <- the atomic point
-    # post-commit GC (crash here leaves garbage, never corruption).
-    # Superseded versions stay on disk while a retained manifest still
-    # references them (time travel); the sweep reclaims the rest.
-    shutil.rmtree(stage, ignore_errors=True)
-    _sweep_unreferenced(silver_path, touched, backend)
+    _capture_plan("merge_state_rewrite", new_state)
+    try:
+        _publish_buckets(silver_path, manifest, new_state, touched, backend)
+    finally:
+        incoming.unpersist()
 
 
 def _manifest_schema(manifest: dict | None):
@@ -585,7 +577,6 @@ def _read_state(
     silver_path: str,
     manifest: dict | None,
     buckets: list[int] | None = None,
-    num_buckets: int = 8,
 ) -> DataFrame | None:
     if manifest is None:
         return None
@@ -907,21 +898,7 @@ def compact_tombstones(
     if not targets:
         return
     kept = _read_state(spark, silver_path, manifest, buckets=targets).filter(~is_old_tomb)
-    stage = os.path.join(silver_path, "data", f"stage-{uuid.uuid4().hex}")
-    kept.write.mode("overwrite").partitionBy("__bucket").parquet(stage)
-    for b in targets:
-        ver = manifest["buckets"][str(b)]
-        new_ver = _next_bucket_version(ver)
-        src = os.path.join(stage, f"__bucket={b}")
-        dst = os.path.join(silver_path, "data", f"b{b}", new_ver)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        else:  # bucket contained only old tombstones -> now empty
-            os.makedirs(dst, exist_ok=True)
-        manifest["buckets"][str(b)] = new_ver
-    _commit_manifest(silver_path, manifest, backend)
-    shutil.rmtree(stage, ignore_errors=True)
-    _sweep_unreferenced(silver_path, targets, backend)
+    _publish_buckets(silver_path, manifest, kept, targets, backend)
 
 
 def optimize_silver(
@@ -958,30 +935,11 @@ def optimize_silver(
     if not fragmented:
         return []
     state = _read_state(spark, silver_path, manifest, buckets=fragmented)
-    stage = os.path.join(silver_path, "data", f"stage-{uuid.uuid4().hex}")
-    (
-        # sort prefix = the partition column: FileFormatWriter then sees
-        # its required ordering and adds no sort of its own (which would
-        # destroy the key order inside each bucket's file)
-        state.repartition("__bucket")
-        .sortWithinPartitions("__bucket", *sort_cols)
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(stage)
-    )
-    for b in fragmented:
-        ver = manifest["buckets"][str(b)]
-        new_ver = _next_bucket_version(ver)
-        src = os.path.join(stage, f"__bucket={b}")
-        dst = os.path.join(silver_path, "data", f"b{b}", new_ver)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        else:
-            os.makedirs(dst, exist_ok=True)
-        manifest["buckets"][str(b)] = new_ver
-    _commit_manifest(silver_path, manifest, backend)
-    shutil.rmtree(stage, ignore_errors=True)
-    _sweep_unreferenced(silver_path, fragmented, backend)
+    # sort prefix = the partition column: FileFormatWriter then sees its
+    # required ordering and adds no sort of its own (which would destroy
+    # the key order inside each bucket's file)
+    rewritten = state.repartition("__bucket").sortWithinPartitions("__bucket", *sort_cols)
+    _publish_buckets(silver_path, manifest, rewritten, fragmented, backend)
     return sorted(fragmented)
 
 

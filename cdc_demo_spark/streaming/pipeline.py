@@ -205,49 +205,50 @@ class CdcPipeline:
         )
         return files.mapInPandas(decode, schema=schema)
 
+    def _sink(self, events: DataFrame, batch_id: int, table: str) -> None:
+        """THE foreachBatch sink of every drive mode: one micro-batch of
+        parsed envelopes (with `_corrupt`) -> DLQ, bronze, silver."""
+        # Cache: the batch feeds three sinks; without it each sink
+        # would re-read the files.
+        events = events.cache()
+        # Dead-letter queue: records the reader could not bind to the
+        # envelope schema (A13). Idempotent per batch: a replayed batch
+        # overwrites its own partition instead of appending duplicates.
+        bad = _drop_erased_corrupt(
+            events.filter(F.col("_corrupt").isNotNull()),
+            os.path.join(self.dlq_dir, table),
+        )
+        if bad.limit(1).count() > 0:
+            bad.select("_corrupt").write.mode("overwrite").parquet(
+                os.path.join(self.dlq_dir, table, f"batch_id={batch_id}")
+            )
+        good = _drop_erased_keys(
+            events.filter(F.col("_corrupt").isNull()).drop("_corrupt"),
+            os.path.join(self.bronze_dir, table),
+        )
+        # Bronze: immutable change log (A11), one partition per batch so
+        # at-least-once replays rewrite in place (the append-mode
+        # version duplicated events on crash-replay).
+        good.write.mode("overwrite").parquet(
+            os.path.join(self.bronze_dir, table, f"batch_id={batch_id}")
+        )
+        # Redelivery dedup within batch scope (B44): same (table,key,seq)
+        # delivered twice is one event. Cross-batch redelivery is
+        # handled by the merge's (ts,seq) idempotency.
+        good = good.dropDuplicates(["table", "key", "seq"])
+        # Silver: latest-image merge (A12).
+        merge_into_silver(
+            self.spark, good, self.silver_dir(table), table,
+            expected_state_bytes=self._state_hint(table),
+        )
+        events.unpersist()
+
     def run_available_now(self, table: str) -> None:
         """Drain all pending files for `table` through bronze + silver,
         then stop (deterministic; restartable via the checkpoint)."""
-        src = self._source(table)
-
-        def process(batch: DataFrame, batch_id: int) -> None:
-            # Dead-letter queue: records the JSON reader could not bind
-            # to the envelope schema (A13). Cache: the batch feeds three
-            # sinks; without it each sink would re-read the files.
-            batch = batch.cache()
-            bad = _drop_erased_corrupt(
-                batch.filter(F.col("_corrupt").isNotNull()),
-                os.path.join(self.dlq_dir, table),
-            )
-            if bad.limit(1).count() > 0:
-                # idempotent per batch: a replayed batch overwrites its
-                # own partition instead of appending duplicates
-                bad.select("_corrupt").write.mode("overwrite").parquet(
-                    os.path.join(self.dlq_dir, table, f"batch_id={batch_id}")
-                )
-            good = _drop_erased_keys(
-                batch.filter(F.col("_corrupt").isNull()).drop("_corrupt"),
-                os.path.join(self.bronze_dir, table),
-            )
-            # Bronze: immutable change log (A11), one partition per
-            # batch so at-least-once replays rewrite in place (the
-            # append-mode version duplicated events on crash-replay).
-            good.write.mode("overwrite").parquet(
-                os.path.join(self.bronze_dir, table, f"batch_id={batch_id}")
-            )
-            # Redelivery dedup within batch scope (B44): same (table,key,seq)
-            # delivered twice is one event. Cross-batch redelivery is
-            # handled by the merge's (ts,seq) idempotency.
-            good = good.dropDuplicates(["table", "key", "seq"])
-            # Silver: latest-image merge (A12).
-            merge_into_silver(
-                self.spark, good, self.silver_dir(table), table,
-                expected_state_bytes=self._state_hint(table),
-            )
-            batch.unpersist()
-
         q = (
-            src.writeStream.foreachBatch(process)
+            self._source(table)
+            .writeStream.foreachBatch(lambda df, bid: self._sink(df, bid, table))
             .option("checkpointLocation", self.checkpoint_dir(table))
             .trigger(availableNow=True)
             .start()
@@ -256,24 +257,9 @@ class CdcPipeline:
 
     # --- continuous variant (same plan, processing-time trigger) ----------
     def start_continuous(self, table: str, interval: str = "5 seconds"):
-        src = self._source(table)
-
-        def process(batch: DataFrame, batch_id: int) -> None:
-            good = _drop_erased_keys(
-                batch.filter(F.col("_corrupt").isNull()).drop("_corrupt"),
-                os.path.join(self.bronze_dir, table),
-            )
-            good.write.mode("overwrite").parquet(
-                os.path.join(self.bronze_dir, table, f"batch_id={batch_id}")
-            )
-            good = good.dropDuplicates(["table", "key", "seq"])
-            merge_into_silver(
-                self.spark, good, self.silver_dir(table), table,
-                expected_state_bytes=self._state_hint(table),
-            )
-
         return (
-            src.writeStream.foreachBatch(process)
+            self._source(table)
+            .writeStream.foreachBatch(lambda df, bid: self._sink(df, bid, table))
             .option("checkpointLocation", self.checkpoint_dir(table))
             .trigger(processingTime=interval)
             .start()
@@ -384,35 +370,15 @@ class NotifiedCdcPipeline(CdcPipeline):
                     .load(paths)
                     .select("path", "content")
                     .mapInPandas(decode, schema=schema)
-                ).cache()
+                )
             else:
                 events = (
                     self.spark.read.schema(json_schema)
                     .option("mode", "PERMISSIVE")
                     .option("columnNameOfCorruptRecord", "_corrupt")
                     .json(paths)
-                ).cache()
-            bad = _drop_erased_corrupt(
-                events.filter(F.col("_corrupt").isNotNull()),
-                os.path.join(self.dlq_dir, table),
-            )
-            if bad.limit(1).count() > 0:
-                bad.select("_corrupt").write.mode("overwrite").parquet(
-                    os.path.join(self.dlq_dir, table, f"batch_id={batch_id}")
                 )
-            good = _drop_erased_keys(
-                events.filter(F.col("_corrupt").isNull()).drop("_corrupt"),
-                os.path.join(self.bronze_dir, table),
-            )
-            good.write.mode("overwrite").parquet(
-                os.path.join(self.bronze_dir, table, f"batch_id={batch_id}")
-            )
-            good = good.dropDuplicates(["table", "key", "seq"])
-            merge_into_silver(
-                self.spark, good, self.silver_dir(table), table,
-                expected_state_bytes=self._state_hint(table),
-            )
-            events.unpersist()
+            self._sink(events, batch_id, table)
 
         q = (
             notifs.writeStream.foreachBatch(process)

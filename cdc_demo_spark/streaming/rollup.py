@@ -20,8 +20,9 @@ Design — append partial aggregates, merge on read, compact on demand:
   Read cost is O(groups × partial dirs), never O(events) — the whole
   point of a rollup.
 - ``compact()`` folds partials into a new base version and commits it
-  with the same optimistic-CAS manifest pattern merge.py uses (atomic
-  ``os.link``, losers raise); uncommitted compactions are invisible.
+  with the same optimistic-CAS manifest pattern merge.py uses (the
+  storage backend's put-if-absent, losers raise); uncommitted
+  compactions are invisible.
 
 100 TB story: each micro-batch shuffles only its own partial groups;
 the stored state is one row per group per un-compacted batch.  Group
@@ -38,6 +39,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cdc_demo_spark.storage import DEFAULT_BACKEND
+from cdc_demo_spark.streaming.merge import ConcurrentCommitError
 
 DEC = "decimal(38,6)"
 
@@ -73,7 +77,7 @@ class IncrementalRollup:
         dst = os.path.join(self.path, "partials", f"batch_id={int(batch_id)}")
         self._partial(batch_df).coalesce(1).write.mode("overwrite").parquet(dst)
 
-    # -- manifest (same CAS idiom as merge.py, self-contained) -------
+    # -- manifest (same put-if-absent CAS commit as merge.py) -------
 
     def _manifest(self) -> dict | None:
         best = None
@@ -93,21 +97,10 @@ class IncrementalRollup:
         new_version = int(manifest.get("version", 0)) + 1
         manifest = {**manifest, "version": new_version}
         dst = os.path.join(self.path, f"_rollup.v{new_version}.json")
-        tmp = os.path.join(self.path, f".rollup.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, dst)
-        except FileExistsError:
-            from cdc_demo_spark.streaming.merge import ConcurrentCommitError
-
+        if not DEFAULT_BACKEND.put_if_absent(dst, json.dumps(manifest).encode()):
             raise ConcurrentCommitError(
                 f"rollup version {new_version} already committed"
-            ) from None
-        finally:
-            os.unlink(tmp)
+            )
 
     # -- read side ---------------------------------------------------
 

@@ -252,3 +252,54 @@ def test_checkpoint_replay_cannot_undo_erasure(spark, tmp_path):
     # silver remains protected by the redacted tombstone
     got = {r["name"] for r in read_silver(spark, p2.silver_dir("pet")).collect()}
     assert key not in got
+
+
+def test_erasure_retires_pre_erasure_snapshots(spark, tmp_path):
+    """Erasure shrinks the time-travel window to its own commit: older
+    snapshots raise SnapshotNotFound instead of serving partial data
+    (their superseded bucket dir gone) or the erased payload, and no
+    bucket dir a retained manifest names holds the key except as the
+    one redacted tombstone."""
+    import json as _json
+
+    from cdc_demo_spark.streaming.merge import (
+        SnapshotNotFound,
+        silver_changes,
+        silver_versions,
+    )
+
+    silver = str(tmp_path / "silver")
+    keys = [f"k{i}" for i in range(20)]
+
+    def batch(seq0, owner):
+        return [
+            {"op": "c" if seq0 == 0 else "u", "ts": f"2024-01-01T00:{seq0 + i:02d}:00",
+             "seq": seq0 + i, "table": "pet", "key": k, "before": None,
+             "after": {"name": k, "owner": owner, "species": "cat", "sex": None,
+                       "birth": None, "death": None}}
+            for i, k in enumerate(keys)
+        ]
+
+    merge_into_silver(spark, envelope_df(spark, batch(0, "a")), silver, "pet", num_buckets=4)
+    merge_into_silver(spark, envelope_df(spark, batch(20, "b")), silver, "pet")
+    pre = silver_versions(silver)[-1]
+    assert read_silver(spark, silver, version=pre).count() == 20
+
+    assert erase_key_from_silver(spark, silver, "k3") is True
+
+    with pytest.raises(SnapshotNotFound):
+        read_silver(spark, silver, version=pre)
+    with pytest.raises(SnapshotNotFound):
+        silver_changes(spark, silver, pre)
+    assert silver_versions(silver) == [pre + 1]
+    mine = read_silver_state(spark, silver).filter(F.col("__key") == "k3").collect()
+    assert len(mine) == 1 and mine[0]["__op"] == "d" and mine[0]["__row"] is None
+
+    retained = set()
+    for v in silver_versions(silver):
+        with open(os.path.join(silver, f"_manifest.v{v}.json")) as f:
+            m = _json.load(f)
+        retained |= {os.path.join(silver, "data", f"b{b}", ver) for b, ver in m["buckets"].items()}
+    dirs = [d for d in retained if any(n.endswith(".parquet") for n in os.listdir(d))]
+    rows = spark.read.parquet(*dirs).filter(F.col("__key") == "k3").collect()
+    assert len(rows) == 1 and rows[0]["__row"] is None

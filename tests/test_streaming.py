@@ -5,11 +5,12 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql.types import StringType, StructField, StructType
 
 from cdc_demo_spark.streaming.generator import generate_events, scramble, write_event_files
 from cdc_demo_spark.streaming.merge import read_silver, replay_oracle
-from cdc_demo_spark.streaming.pipeline import CdcPipeline
+from cdc_demo_spark.streaming.pipeline import CdcPipeline, NotifiedCdcPipeline
 
 PAYLOAD = StructType(
     [
@@ -60,23 +61,58 @@ def test_stream_incremental_and_checkpoint_restart(spark, tmp_path):
     assert bronze.count() == len(events)
 
 
-def test_malformed_records_go_to_dlq(spark, tmp_path):
+def _drain_continuous(spark, p, expected, dlq_root) -> None:
+    """Run start_continuous until silver equals `expected` and the DLQ
+    exists (or a generous deadline passes), then stop the query."""
+    import time
+
+    q = p.start_continuous("pet", interval="1 seconds")
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            try:
+                got = {r["name"]: r.asDict()
+                       for r in read_silver(spark, p.silver_dir("pet")).collect()}
+                if got == expected and os.path.isdir(dlq_root):
+                    return
+            except Exception:  # silver not committed yet / commit race
+                pass
+            time.sleep(1)
+    finally:
+        try:
+            q.stop()
+        except Exception:
+            pass  # stop raced with the final trigger
+
+
+@pytest.mark.parametrize("mode", ["available_now", "continuous", "notified"])
+def test_malformed_records_go_to_dlq(spark, tmp_path, mode):
     """A13: unparseable records divert to the dead-letter queue; good
-    records in the same file still flow."""
-    p = make_pipeline(spark, tmp_path)
+    records in the same file still flow — in every drive mode."""
+    cls = NotifiedCdcPipeline if mode == "notified" else CdcPipeline
+    p = cls(spark, str(tmp_path / "cdc"), {"pet": PAYLOAD})
     events = generate_events(n_keys=5, n_events=20, seed=9)
+    expected = replay_oracle(events)
     land = os.path.join(p.landing_dir, "pet")
-    write_event_files(events, land, files=1)
-    with open(os.path.join(land, "zz-badfile.json"), "w") as f:
+    paths = write_event_files(events, land, files=1)
+    bad_file = os.path.join(land, "zz-badfile.json")
+    with open(bad_file, "w") as f:
         f.write('{"op": "c", "seq": broken!!!\n')
         f.write("utter garbage\n")
+    dlq_root = os.path.join(p.dlq_dir, "pet")
 
-    p.run_available_now("pet")
+    if mode == "available_now":
+        p.run_available_now("pet")
+    elif mode == "notified":
+        p.notify("pet", [*paths, bad_file])
+        p.run_notified_available_now("pet")
+    else:
+        _drain_continuous(spark, p, expected, dlq_root)
 
-    dlq = spark.read.parquet(os.path.join(p.dlq_dir, "pet"))
+    dlq = spark.read.parquet(dlq_root)
     assert dlq.count() == 2
     got = {r["name"]: r.asDict() for r in read_silver(spark, p.silver_dir("pet")).collect()}
-    assert got == replay_oracle(events)
+    assert got == expected
 
 
 def test_continuous_trigger_pipeline(spark, tmp_path):

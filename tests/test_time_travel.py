@@ -451,10 +451,9 @@ def test_referenced_dirs_flaky_read_aborts_sweep(tmp_path):
 
 
 def test_referenced_dirs_torn_json(tmp_path):
-    # torn JSON on the UNFRAMED legacy manifest = an in-progress legacy
-    # write (never a committed snapshot) -> skipped; torn JSON on a
-    # numbered manifest is impossible-without-corruption (framed CAS
-    # commit) -> must raise, not unprotect.
+    # torn JSON on a numbered manifest is impossible-without-corruption
+    # (put-if-absent CAS commit of complete content) -> must raise, not
+    # unprotect.
     import json as _json
 
     import cdc_demo_spark.streaming.merge as M
@@ -463,8 +462,6 @@ def test_referenced_dirs_torn_json(tmp_path):
     os.makedirs(silver)
     with open(os.path.join(silver, "_manifest.v1.json"), "w") as f:
         _json.dump({"buckets": {"0": "v1"}}, f)
-    with open(os.path.join(silver, M.MANIFEST), "w") as f:
-        f.write('{"buckets": {"0"')  # torn legacy write
     assert M._referenced_dirs(silver, M.DEFAULT_BACKEND) == {
         os.path.join(silver, "data", "b0", "v1")
     }
