@@ -80,27 +80,13 @@ def erase_key_from_silver(
     if manifest is None:
         return False
     b = bucket_id_of(spark, key, manifest["num_buckets"])
-    state = _read_state(spark, silver_path, manifest, buckets=[b])
-    if state is None:
-        return False
-    state = state.cache()
+    state = _read_state(spark, silver_path, manifest, buckets=[b]).cache()
     mine = state.filter(F.col("__key") == key)
     top = mine.agg(F.max(F.struct("__ts", "__seq")).alias("w")).collect()[0]["w"]
     if top is None:
         state.unpersist()
         return False
-    row_type = state.schema["__row"].dataType
-    tomb = spark.createDataFrame(
-        [(key, "d", top["__ts"], top["__seq"])],
-        "__key string, __op string, __ts timestamp, __seq long",
-    ).select(
-        "__key",
-        "__op",
-        "__ts",
-        "__seq",
-        F.lit(None).cast(row_type).alias("__row"),
-        F.lit(b).cast("int").alias("__bucket"),
-    )
+    tomb = spark.createDataFrame([(key, "d", top["__ts"], top["__seq"], None, b)], state.schema)
     kept = state.filter(F.col("__key") != key).unionByName(tomb)
     try:
         _publish_buckets(silver_path, manifest, kept, [b], backend)

@@ -17,8 +17,14 @@ working (/root/reference/README.md:8 "the dataflow template fails";
 Physical layout — a minimal Delta/Iceberg-style versioned table:
 
     silver/
-      _manifest.v{N}.json        {"num_buckets": B, "buckets": {"3": "v7-3fa9c1d2", ...}}
+      _manifest.v{N}.json        {"num_buckets": B, "schema": <payload struct json>,
+                                  "buckets": {"3": "v7-3fa9c1d2", ...}}
       data/b3/v7-3fa9c1d2/*.parquet  (immutable once written)
+
+The manifest is the table's only metadata: readers open exactly the
+bucket-version dirs it names, with the payload schema it holds — never
+a directory probe or a parquet-footer inference.  A referenced dir that
+is missing fails the read rather than serving a partial snapshot.
 
 A merge stages new versions for ONLY the touched key-hash buckets, then
 commits by atomically publishing the next numbered manifest
@@ -59,10 +65,20 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType, TimestampType
 
 from cdc_demo_spark.storage import DEFAULT_BACKEND, CommitBackend
 
-META_COLS = ("__key", "__op", "__ts", "__seq")
+# Every state row's metadata columns; the payload struct ``__row`` that
+# follows them has the type the manifest's "schema" holds.
+_STATE_META = StructType(
+    [
+        StructField("__key", StringType()),
+        StructField("__op", StringType()),
+        StructField("__ts", TimestampType()),
+        StructField("__seq", LongType()),
+    ]
+)
 _MANIFEST_V = re.compile(r"_manifest\.v(\d+)\.json$")
 
 
@@ -160,19 +176,18 @@ def _load_manifest(
     ``version``, that exact retained manifest (time travel) or
     SnapshotNotFound; None for a table with no commit yet."""
     versions = _manifest_versions(silver_path, backend)
-    if version is not None:
-        for n, path in versions:
-            if n == int(version):
-                manifest = json.loads(backend.read(path))
-                manifest["version"] = n
-                return manifest
-        raise SnapshotNotFound(
-            f"silver snapshot v{version} is not retained at {silver_path}; "
-            f"readable versions: {[n for n, _ in versions]}"
-        )
-    if not versions:
-        return None
-    n, path = versions[-1]
+    if version is None:
+        if not versions:
+            return None
+        n, path = versions[-1]
+    else:
+        n = int(version)
+        path = dict(versions).get(n)
+        if path is None:
+            raise SnapshotNotFound(
+                f"silver snapshot v{version} is not retained at {silver_path}; "
+                f"readable versions: {[v for v, _ in versions]}"
+            )
     manifest = json.loads(backend.read(path))
     manifest["version"] = n
     return manifest
@@ -216,10 +231,7 @@ def _trim_manifests(silver_path: str, doomed, backend: CommitBackend) -> set[str
     for _n, path in doomed:
         try:
             m = json.loads(backend.read(path))
-            for b, ver in m.get("buckets", {}).items():
-                was_referenced.add(
-                    os.path.join(silver_path, "data", f"b{b}", ver)
-                )
+            was_referenced.update(_bucket_paths(silver_path, m).values())
         except (OSError, ValueError):
             pass  # raced another trimmer; its touch covers the dirs
         backend.delete(path)
@@ -277,9 +289,7 @@ def _referenced_dirs(silver_path: str, backend: CommitBackend) -> set[str]:
             continue
         # torn JSON here is corruption (commits are put-if-absent of
         # complete content): raise rather than unprotect
-        m = json.loads(raw)
-        for b, ver in m.get("buckets", {}).items():
-            refs.add(os.path.join(silver_path, "data", f"b{b}", ver))
+        refs.update(_bucket_paths(silver_path, json.loads(raw)).values())
     return refs
 
 
@@ -386,15 +396,14 @@ def _publish_buckets(
     stage = os.path.join(silver_path, "data", f"stage-{uuid.uuid4().hex}")
     df.write.mode("overwrite").partitionBy("__bucket").parquet(stage)
     for b in buckets:
-        new_ver = _next_bucket_version(manifest["buckets"].get(str(b)))
+        manifest["buckets"][str(b)] = _next_bucket_version(manifest["buckets"].get(str(b)))
+    for b, dst in _bucket_paths(silver_path, manifest, buckets).items():
         src = os.path.join(stage, f"__bucket={b}")
-        dst = os.path.join(silver_path, "data", f"b{b}", new_ver)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         if os.path.exists(src):
             os.rename(src, dst)
         else:  # bucket emptied entirely (e.g. everything GC'd)
             os.makedirs(dst, exist_ok=True)
-        manifest["buckets"][str(b)] = new_ver
     _commit_manifest(silver_path, manifest, backend)  # <- the atomic point
     # post-commit GC (crash here leaves garbage, never corruption).
     # Superseded versions stay on disk while a retained manifest still
@@ -403,12 +412,14 @@ def _publish_buckets(
     _sweep_unreferenced(silver_path, buckets, backend)
 
 
-def _bucket_paths(silver_path: str, manifest: dict, buckets=None) -> list[str]:
-    out = []
-    for b, ver in manifest["buckets"].items():
-        if buckets is None or int(b) in buckets:
-            out.append(os.path.join(silver_path, "data", f"b{b}", ver))
-    return out
+def _bucket_paths(silver_path: str, manifest: dict, buckets=None) -> dict[int, str]:
+    """THE bucket-dir recipe: bucket id -> the version dir ``manifest``
+    names for it (only ``buckets``' when given)."""
+    return {
+        int(b): os.path.join(silver_path, "data", f"b{b}", ver)
+        for b, ver in manifest["buckets"].items()
+        if buckets is None or int(b) in buckets
+    }
 
 
 # --------------------------------------------------------------------------
@@ -492,10 +503,9 @@ def merge_into_silver(
         incoming.unpersist()
         return
 
-    current = _read_state(spark, silver_path, manifest, buckets=touched)
-    if current is None:
-        merged = incoming
-    else:
+    merged = incoming
+    if manifest is not None:
+        current = _read_state(spark, silver_path, manifest, buckets=touched)
         merged = _align_row_struct(current, union_schema).unionByName(incoming)
 
     # Deletes stay in state as TOMBSTONES (__op='d', null row): dropping
@@ -527,8 +537,6 @@ def merge_into_silver(
 
 
 def _manifest_schema(manifest: dict | None):
-    from pyspark.sql.types import StructType
-
     if manifest is None or "schema" not in manifest:
         return None
     return StructType.fromJson(json.loads(manifest["schema"]))
@@ -537,8 +545,6 @@ def _manifest_schema(manifest: dict | None):
 def _merged_payload_schema(table_schema, batch_schema):
     """Union of payload fields, table fields first. A type change on a
     shared field is breaking and raises (additive evolution only)."""
-    from pyspark.sql.types import StructField, StructType
-
     if table_schema is None:
         return batch_schema
     have = {f.name: f.dataType for f in table_schema.fields}
@@ -575,37 +581,36 @@ def _align_row_struct(df: DataFrame, union_schema) -> DataFrame:
 def _read_state(
     spark: SparkSession,
     silver_path: str,
-    manifest: dict | None,
+    manifest: dict,
     buckets: list[int] | None = None,
-) -> DataFrame | None:
-    if manifest is None:
-        return None
-    paths = _bucket_paths(silver_path, manifest, buckets)
-    paths = [p for p in paths if os.path.exists(p) and any(
-        f.endswith(".parquet") for f in os.listdir(p)
-    )]
-    if not paths:
-        return None
+) -> DataFrame:
+    """The committed snapshot ``manifest`` names (only ``buckets``' when
+    given), read with the schema the manifest holds: bucket versions
+    written before an additive evolution read the new fields as NULL,
+    no footer is opened to infer a schema, and a referenced dir that is
+    missing raises PATH_NOT_FOUND.  No referenced bucket -> an empty
+    DataFrame of the same schema."""
+    schema = StructType([*_STATE_META.fields, StructField("__row", _manifest_schema(manifest))])
+    paths = list(_bucket_paths(silver_path, manifest, buckets).values())
+    df = spark.read.schema(schema).parquet(*paths) if paths else spark.createDataFrame([], schema)
     # __bucket is derivable from __key; recompute instead of storing.
-    # mergeSchema: bucket versions written before a schema evolution
-    # carry the narrower payload struct; the merged read widens them.
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
     return df.withColumn("__bucket", _bucket_of("__key", manifest["num_buckets"]))
 
 
 def read_silver_state(
     spark: SparkSession,
     silver_path: str,
-    buckets: list[int] | None = None,
     backend: CommitBackend = DEFAULT_BACKEND,
     version: int | None = None,
-) -> DataFrame | None:
-    """Committed snapshot (manifest-resolved); with `buckets`, only
-    those buckets' files are opened; with `version`, the retained
-    historical manifest of that number — a time-travel read (raises
-    SnapshotNotFound outside the retained window)."""
+) -> DataFrame:
+    """Committed snapshot (manifest-resolved); with `version`, the
+    retained historical manifest of that number — a time-travel read
+    (raises SnapshotNotFound outside the retained window).  Raises
+    FileNotFoundError for a table with no commit yet."""
     manifest = _load_manifest(silver_path, backend, version=version)
-    return _read_state(spark, silver_path, manifest, buckets)
+    if manifest is None:
+        raise FileNotFoundError(silver_path)
+    return _read_state(spark, silver_path, manifest)
 
 
 def read_silver(
@@ -621,8 +626,6 @@ def read_silver(
     references them, so a historical read is byte-identical to what a
     reader saw at that commit, not a reconstruction."""
     state = read_silver_state(spark, silver_path, backend=backend, version=version)
-    if state is None:
-        raise FileNotFoundError(silver_path)
     return state.filter(F.col("__op") != "d").select("__row.*")
 
 
@@ -646,8 +649,6 @@ def lookup_silver_key(
         raise FileNotFoundError(silver_path)
     b = bucket_id_of(spark, key, manifest["num_buckets"])
     state = _read_state(spark, silver_path, manifest, buckets=[b])
-    if state is None:
-        return None
     return (
         state.filter((F.col("__key") == key) & (F.col("__op") != "d"))
         .select("__row.*")
@@ -706,21 +707,8 @@ def silver_changes(
         if m_from["buckets"].get(b) != m_to["buckets"].get(b)
     )
     cols = ["__key", "__op", "__row"]
-    before = _read_state(spark, silver_path, m_from, buckets=changed)
-    after = _read_state(spark, silver_path, m_to, buckets=changed)
-    if before is None and after is None:
-        # nothing moved (or both snapshots empty): an empty feed with
-        # the real schema, derived from the current state
-        cur = _read_state(spark, silver_path, m_to)
-        if cur is None:
-            cur = _read_state(spark, silver_path, m_from)
-        if cur is None:
-            raise FileNotFoundError(silver_path)
-        before = after = cur.limit(0)
-    b = (before.select(*cols) if before is not None
-         else after.select(*cols).limit(0)).alias("b")
-    a = (after.select(*cols) if after is not None
-         else before.select(*cols).limit(0)).alias("a")
+    b = _read_state(spark, silver_path, m_from, buckets=changed).select(*cols).alias("b")
+    a = _read_state(spark, silver_path, m_to, buckets=changed).select(*cols).alias("a")
     live_b = F.col("b.__op").isNotNull() & (F.col("b.__op") != "d")
     live_a = F.col("a.__op").isNotNull() & (F.col("a.__op") != "d")
     joined = b.join(a, F.col("b.__key") == F.col("a.__key"), "full")
@@ -831,8 +819,6 @@ class ChangefeedRelay:
             snap = read_silver_state(
                 spark, self.silver_path, backend=self.backend, version=cur
             )
-            if snap is None:
-                return None
             live = snap.filter(F.col("__op") != "d").select(
                 F.col("__key").alias("key"),
                 F.lit("insert").alias("change"),
@@ -887,9 +873,9 @@ def compact_tombstones(
     population, not total state — the same O(touched) property the merge
     itself has."""
     manifest = _load_manifest(silver_path, backend)
-    state = _read_state(spark, silver_path, manifest)
-    if state is None:
+    if manifest is None:
         return
+    state = _read_state(spark, silver_path, manifest)
     is_old_tomb = (F.col("__op") == "d") & (F.col("__ts") <= F.lit(watermark_ts))
     targets = [
         int(r["__bucket"])
@@ -925,13 +911,10 @@ def optimize_silver(
     if manifest is None:
         return []
     fragmented = []
-    for b, ver in manifest["buckets"].items():
-        d = os.path.join(silver_path, "data", f"b{b}", ver)
-        if not os.path.isdir(d):
-            continue
+    for b, d in _bucket_paths(silver_path, manifest).items():
         n_files = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
         if n_files > max_files_per_bucket:
-            fragmented.append(int(b))
+            fragmented.append(b)
     if not fragmented:
         return []
     state = _read_state(spark, silver_path, manifest, buckets=fragmented)

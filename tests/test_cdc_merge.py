@@ -223,6 +223,81 @@ def test_bucket_count_policy_from_state_size(spark, tmp_path):
     assert len(all_dirs) > 32
 
 
+def test_missing_referenced_bucket_dir_fails_the_read(spark, tmp_path):
+    """The manifest names the snapshot's files: a referenced bucket dir
+    that is gone fails the read instead of serving the snapshot minus
+    that bucket."""
+    import os
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    from cdc_demo_spark.streaming.merge import _load_manifest
+
+    silver = str(tmp_path / "silver")
+    events = generate_events(n_keys=20, n_events=80, seed=71)
+    merge_into_silver(spark, envelope_df(spark, events), silver, "pet")
+    assert_matches_oracle(spark, silver, events)
+    b, ver = next(iter(_load_manifest(silver)["buckets"].items()))
+    shutil.rmtree(os.path.join(silver, "data", f"b{b}", ver))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_silver(spark, silver).collect()
+
+
+def _jobs_started(spark, build):
+    """(build(), Spark jobs started while building it)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_silver_reads_infer_no_schema(spark, tmp_path):
+    """Reads take the schema from the manifest: building a full read
+    starts no Spark job, and a point lookup only the one-row job that
+    hashes its key (no parquet-footer inference)."""
+    from cdc_demo_spark.streaming.merge import lookup_silver_key
+
+    silver = str(tmp_path / "silver")
+    events = generate_events(n_keys=20, n_events=80, seed=72)
+    merge_into_silver(spark, envelope_df(spark, events), silver, "pet")
+    key = next(iter(replay_oracle(events)))
+
+    full, jobs = _jobs_started(spark, lambda: read_silver(spark, silver))
+    assert jobs == 0
+    hit, jobs = _jobs_started(spark, lambda: lookup_silver_key(spark, silver, key))
+    assert jobs == 1  # bucket_id_of
+    assert [r["name"] for r in hit.collect()] == [key]
+    assert full.count() == len(replay_oracle(events))
+
+
+def test_lookup_in_unwritten_bucket_is_empty(spark, tmp_path):
+    """A key whose bucket no commit ever wrote reads as an empty
+    DataFrame with the payload columns, not None."""
+    from cdc_demo_spark.streaming.merge import _load_manifest, bucket_id_of, lookup_silver_key
+
+    silver = str(tmp_path / "silver")
+    events = generate_events(n_keys=2, n_events=10, seed=73)
+    merge_into_silver(spark, envelope_df(spark, events), silver, "pet", num_buckets=64)
+    written = {int(b) for b in _load_manifest(silver)["buckets"]}
+    assert len(written) <= 2
+    key = next(
+        k for k in (f"absent{i}" for i in range(100))
+        if bucket_id_of(spark, k, 64) not in written
+    )
+    out = lookup_silver_key(spark, silver, key)
+    assert out.columns == PAYLOAD.names
+    assert out.collect() == []
+
+
 def test_uncommitted_staging_is_invisible_to_readers(spark, tmp_path):
     """Crash-consistency: data staged (or even versioned) but NOT in the
     committed manifest must not affect reads — the manifest replace is
@@ -290,14 +365,18 @@ def test_compact_tombstones_gc(spark, tmp_path):
 def test_schema_evolution_additive_column(spark, tmp_path):
     """A new payload field (source ALTER TABLE ADD COLUMN) widens the
     replica: old rows read NULL, new rows carry the value, and buckets
-    written before the evolution still read correctly (mergeSchema)."""
+    written before the evolution still read correctly.  Time travel
+    across the evolution reads each snapshot with its own manifest's
+    schema."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     from cdc_demo_spark.schemas import envelope_schema
+    from cdc_demo_spark.streaming.merge import silver_changes, silver_versions
 
     silver = str(tmp_path / "silver")
     base = generate_events(n_keys=12, n_events=60, seed=61)
     merge_into_silver(spark, envelope_df(spark, base), silver, "pet")
+    pre = silver_versions(silver)[-1]
 
     wide_payload = StructType(
         PAYLOAD.fields + [StructField("microchip", StringType(), True)]
@@ -308,6 +387,7 @@ def test_schema_evolution_additive_column(spark, tmp_path):
           "key": "chipped", "before": None, "after": row}
     wide_df = spark.createDataFrame([ev], envelope_schema(wide_payload))
     merge_into_silver(spark, wide_df, silver, "pet")
+    post = silver_versions(silver)[-1]
 
     out = read_silver(spark, silver)
     assert "microchip" in out.columns
@@ -323,6 +403,10 @@ def test_schema_evolution_additive_column(spark, tmp_path):
     out2 = read_silver(spark, silver)
     assert "microchip" in out2.columns
     assert {r["name"]: r for r in out2.collect()}["chipped"]["microchip"] == "RFID-42"
+    # the historical manifest's schema governs the historical read
+    assert "microchip" not in read_silver(spark, silver, version=pre).columns
+    feed = silver_changes(spark, silver, pre, post).collect()
+    assert [(r["key"], r["change"]) for r in feed] == [("chipped", "insert")]
 
 
 def test_schema_evolution_type_conflict_raises(spark, tmp_path):
